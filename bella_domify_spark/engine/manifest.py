@@ -36,6 +36,7 @@ Design (plain PySpark, no custom Catalyst):
 from __future__ import annotations
 
 import json
+import numbers
 import os
 from typing import Iterator, List, Optional
 
@@ -138,6 +139,16 @@ class BucketStore:
             return []
         return sorted(n for n in os.listdir(mdir) if n.endswith(".json"))
 
+    def completed(self) -> set:
+        """Committed bucket ids: one listing of ``_manifests/``, no
+        manifest is opened (its existence is the commit marker)."""
+        # parse the FULL id: names are bucket-%05d.json, but %05d widens
+        # past 99,999 (B=2^20 is the recommended web-scale bucket count) —
+        # a fixed [7:12] slice would silently mis-parse bucket 123456 as
+        # 12345 and corrupt the resume set
+        return {int(n[len("bucket-"):n.index(".")])
+                for n in self.manifest_names() if n.startswith("bucket-")}
+
     def read_json(self, *parts: str) -> dict:
         p = self.path(*parts)
         if self.is_uri:
@@ -232,6 +243,12 @@ class BucketStore:
             f.write(data)
         os.replace(tmp, p)
 
+    def parquet_schema(self, rel: str):
+        """Arrow schema from a parquet file's footer (no data pages)."""
+        import pyarrow.parquet as pq
+
+        return pq.read_schema(self.path(rel), filesystem=self.fs)
+
     def file_size(self, rel: str) -> int:
         p = self.path(rel)
         if self.is_uri:
@@ -239,18 +256,8 @@ class BucketStore:
         return os.path.getsize(p)
 
 
-def _manifest_dir(out_dir: str) -> str:  # kept for callers/tests
-    return os.path.join(out_dir, "_manifests")
-
-
 def completed_buckets(out_dir: str) -> set:
-    store = BucketStore(out_dir)
-    # parse the FULL id: names are bucket-%05d.json, but %05d widens past
-    # 99,999 (B=2^20 is the recommended web-scale bucket count) — a fixed
-    # [7:12] slice would silently mis-parse bucket 123456 as 12345 and
-    # corrupt the resume set
-    return {int(n[len("bucket-"):n.index(".")]) for n in store.manifest_names()
-            if n.startswith("bucket-")}
+    return BucketStore(out_dir).completed()
 
 
 RUN_PARAMS_NAME = "_run_params.json"
@@ -320,20 +327,114 @@ def with_bucket(df: DataFrame, n_buckets: int,
     return df.withColumn("pid", pid.cast("int"))
 
 
+# Spark's XXH64 (catalyst expressions/XXH64.java) is the standard XXH64
+# over each column's bytes — UTF-8 for strings, 4 little-endian bytes for
+# INT, 8 for BIGINT — chained: each column's signed result seeds the next,
+# and the first seed is 42
+_XXH_P1 = 0x9E3779B185EBCA87
+_XXH_P2 = 0xC2B2AE3D27D4EB4F
+_XXH_P3 = 0x165667B19E3779F9
+_XXH_P4 = 0x85EBCA77C2B2AE63
+_XXH_P5 = 0x27D4EB2F165667C5
+_XXH_SEED = 42
+_M64 = (1 << 64) - 1
+#: integer key dtype → bytes Spark hashes (= the value's width)
+_INT_KEY_BYTES = {"int": 4, "bigint": 8}
+
+
+def _rotl64(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh64_round(acc: int, lane: int) -> int:
+    return _rotl64((acc + lane * _XXH_P2) & _M64, 31) * _XXH_P1 & _M64
+
+
+def _xxh64(data: bytes, seed: int) -> int:
+    """Standard XXH64 of ``data`` (unsigned 64-bit result)."""
+    n, i = len(data), 0
+
+    def lane(j: int) -> int:
+        return int.from_bytes(data[j:j + 8], "little")
+
+    if n >= 32:
+        v = [(seed + _XXH_P1 + _XXH_P2) & _M64, (seed + _XXH_P2) & _M64,
+             seed & _M64, (seed - _XXH_P1) & _M64]
+        while i + 32 <= n:
+            v = [_xxh64_round(v[k], lane(i + 8 * k)) for k in range(4)]
+            i += 32
+        h = (_rotl64(v[0], 1) + _rotl64(v[1], 7) + _rotl64(v[2], 12)
+             + _rotl64(v[3], 18)) & _M64
+        for x in v:
+            h = ((h ^ _xxh64_round(0, x)) * _XXH_P1 + _XXH_P4) & _M64
+    else:
+        h = (seed + _XXH_P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        h = (_rotl64(h ^ _xxh64_round(0, lane(i)), 27) * _XXH_P1
+             + _XXH_P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        h ^= int.from_bytes(data[i:i + 4], "little") * _XXH_P1 & _M64
+        h = (_rotl64(h, 23) * _XXH_P2 + _XXH_P3) & _M64
+        i += 4
+    for b in data[i:]:
+        h = _rotl64(h ^ (b * _XXH_P5 & _M64), 11) * _XXH_P1 & _M64
+    h = (h ^ (h >> 33)) * _XXH_P2 & _M64
+    h = (h ^ (h >> 29)) * _XXH_P3 & _M64
+    return h ^ (h >> 32)
+
+
+def bucket_of(conv_id, turn_idx, n_buckets: int, key_types) -> int:
+    """Driver-side mirror of ``with_bucket``'s default pid, i.e.
+    ``pmod(xxhash64(conv_id, turn_idx), n_buckets)`` for non-null keys
+    already in their columns' domains (``key_types``: the Spark dtypes
+    of conv_id and turn_idx — the hash input depends on them). Lets a
+    point read route without a Spark job; a test pins it equal to
+    ``with_bucket``."""
+    h = _XXH_SEED
+    for v, dt in zip((conv_id, turn_idx), key_types):
+        t = dt.simpleString()
+        data = (v.encode("utf-8") if t == "string"
+                else int(v).to_bytes(_INT_KEY_BYTES[t], "little",
+                                     signed=True))
+        h = _xxh64(data, h)
+    return (h - (1 << 64) if h >> 63 else h) % n_buckets
+
+
+def _key_value(name: str, v, dtype):
+    """``v`` as a value of key column type ``dtype``, or None when no row
+    of that type can equal it (an int outside the column's range). Keys
+    are str for a string column and int for an int/bigint one; anything
+    else raises TypeError, because it would hash as another type and
+    route to an arbitrary bucket."""
+    t = dtype.simpleString()
+    if t == "string" and isinstance(v, str):
+        return v
+    if (t in _INT_KEY_BYTES and isinstance(v, numbers.Integral)
+            and not isinstance(v, bool)):
+        v, bits = int(v), 8 * _INT_KEY_BYTES[t]
+        return v if -(1 << bits - 1) <= v < 1 << bits - 1 else None
+    raise TypeError(f"lookup_turn: {name}={v!r} does not fit its {t} key "
+                    "column (str for string, int for int/bigint)")
+
+
+def _bucket_file(pid: int) -> str:
+    return f"bucket-{pid:05d}.parquet"
+
+
 def run_resumable(df: DataFrame, out_dir: str, n_buckets: int = 64,
                   partitions: Optional[int] = None, run_id: str = "run",
-                  fused: bool = True,
                   ocr_provider: Optional[str] = None,
                   bucket_expr=None) -> dict:
     """Full resumable extraction: bucket → resume-filter → shuffle → parse →
     per-bucket atomic sink. ``df`` is the raw transcript table; ``out_dir``
     is a local path or a pyarrow-compatible URI.
 
-    fused=True (default) parses INSIDE the sink's Arrow stage: one Python
-    worker set and one JVM↔Python crossing for the fat result columns,
-    instead of parse-worker → JVM → sink-worker. Identical output; ~1.5-2×
-    pipeline throughput at high core counts. fused=False keeps the two-stage
-    plan (useful when a pre-parsed DataFrame is reused elsewhere).
+    The parse runs INSIDE the sink's Arrow stage: one Python worker set
+    and one JVM↔Python crossing for the fat result columns, instead of
+    parse-worker → JVM → sink-worker (~1.5-2× pipeline throughput at high
+    core counts).
 
     One driver per ``out_dir`` at a time: the resume set is read once at
     start and orphaned attempt-temps are swept then (safe because no task
@@ -345,13 +446,11 @@ def run_resumable(df: DataFrame, out_dir: str, n_buckets: int = 64,
     Returns {buckets_total, buckets_done_before, buckets_written, rows,
     bytes, wall_ms}.
     """
-    from bella_domify_spark.engine.extract import apply_parse
-
     _store = BucketStore(out_dir)
     _store.makedirs()
     _store.clean_tmp()  # orphans from crashed attempts; no attempt is live
 
-    done = completed_buckets(out_dir)
+    done = _store.completed()
     _pin_run_params(_store, done, ocr_provider, n_buckets,
                     custom_bucket=bucket_expr is not None)
     df = with_bucket(df, n_buckets, bucket_expr)
@@ -370,8 +469,6 @@ def run_resumable(df: DataFrame, out_dir: str, n_buckets: int = 64,
 
     p = partitions or df.sparkSession.sparkContext.defaultParallelism
     df = df.repartition(min(p, n_buckets), "pid").sortWithinPartitions("pid")
-    parsed = df if fused else apply_parse(df, keep=("pid",),
-                                          ocr_provider=ocr_provider)
 
     def sink(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:  # noqa: F821
         import time
@@ -382,11 +479,9 @@ def run_resumable(df: DataFrame, out_dir: str, n_buckets: int = 64,
         out_schema = pa.schema([("bucket", pa.int32()), ("rows", pa.int64()),
                                 ("bytes", pa.int64()), ("wall_ms", pa.float64())])
 
-        def maybe_parse(batch: "pa.RecordBatch") -> "pa.RecordBatch":
-            """Fused mode: raw transcript batch → parsed batch (same columns
-            the two-stage plan produces)."""
-            if "extracted_text" in batch.schema.names:
-                return batch  # already parsed upstream (fused=False)
+        def parse(batch: "pa.RecordBatch") -> "pa.RecordBatch":
+            """Raw transcript batch → parsed batch (the extract_transcripts
+            columns plus pid)."""
             from bella_domify_spark.context import image_provider
             from bella_domify_spark.parsers.dispatch import parse_payload
 
@@ -420,7 +515,7 @@ def run_resumable(df: DataFrame, out_dir: str, n_buckets: int = 64,
                 return
             writer.close()
             commit()
-            fname = f"bucket-{cur_pid:05d}.parquet"
+            fname = _bucket_file(cur_pid)
             wall_ms = (time.monotonic() - t0) * 1000.0
             nbytes = store.file_size(fname)
             manifest = {"bucket": cur_pid, "run_id": run_id, "rows": rows,
@@ -434,7 +529,7 @@ def run_resumable(df: DataFrame, out_dir: str, n_buckets: int = 64,
             writer, rows = None, 0
 
         for batch in batches:
-            batch = maybe_parse(batch)
+            batch = parse(batch)
             pids = batch.column("pid").to_pylist()
             data = batch.drop_columns(["pid"])
             # split the batch at pid boundaries (rows are pid-sorted)
@@ -447,14 +542,14 @@ def run_resumable(df: DataFrame, out_dir: str, n_buckets: int = 64,
                         cur_pid = pid
                         t0 = time.monotonic()
                         writer, commit = store.parquet_writer(
-                            f"bucket-{pid:05d}.parquet", data.schema)
+                            _bucket_file(pid), data.schema)
                     writer.write_batch(data.slice(start, i - start))
                     rows += i - start
                     start = i
         close_current()
         yield pa.RecordBatch.from_pylist(results, schema=out_schema)
 
-    summaries = parsed.mapInArrow(sink, _SUMMARY_TYPE).collect()
+    summaries = df.mapInArrow(sink, _SUMMARY_TYPE).collect()
     return {
         "buckets_total": n_buckets,
         "buckets_done_before": len(done),
@@ -472,18 +567,26 @@ def lookup_turn(spark, out_dir: str, conv_id, turn_idx) -> DataFrame:
     pinned ``n_buckets`` (``_run_params.json``), read ONLY that one
     parquet file, and filter inside it.
 
-    At 100 TB with 10^5 buckets this touches one file (+ one footer for
-    schema inference) instead of the full corpus — the difference between
-    a sub-second point read and a cluster-wide scan. Key-column dtypes are
-    inferred from a committed bucket's parquet schema because xxhash64 is
-    type-sensitive: hashing turn_idx as INT when the writer hashed BIGINT
-    routes to the wrong bucket (silently empty results), so the contract
-    is pinned to the written files, not to caller guesses.
+    Per call: one read of ``_run_params.json``, one listing of
+    ``_manifests/`` (no manifest is opened) and one parquet footer read
+    on the driver, then exactly ONE Spark job when the returned frame is
+    collected — building it runs none, and a new key compiles no
+    code. Key-column dtypes come from a
+    committed bucket's footer because xxhash64 is type-sensitive:
+    hashing turn_idx as INT when the writer hashed BIGINT routes to the
+    wrong bucket (silently empty results), so the contract is pinned to
+    the written files, not to caller guesses. The bucket itself is
+    computed by ``bucket_of``, the driver-side mirror of ``with_bucket``
+    (a test pins the two equal), and the read gets the footer's schema
+    so Spark infers nothing.
 
-    Returns a DataFrame (possibly empty) with the bucket-file schema; a
-    key routing to a never-committed bucket yields an empty frame.
+    Keys are ``str`` for a string key column and ``int`` for an
+    int/bigint one (``TypeError`` otherwise). Returns a DataFrame
+    (possibly empty) with the bucket-file schema; a key the key columns
+    cannot hold (e.g. 2**40 on an INT turn_idx) or one routing to a
+    never-committed bucket yields an empty frame.
     """
-    from pyspark.sql import functions as F
+    from pyspark.sql.pandas.types import from_arrow_schema
 
     store = BucketStore(out_dir)
     params = store.read_json("_manifests", RUN_PARAMS_NAME)
@@ -493,20 +596,25 @@ def lookup_turn(spark, out_dir: str, conv_id, turn_idx) -> DataFrame:
             "lookup_turn's default-hash routing would probe the wrong "
             "bucket — read the layout with spark.read.parquet instead")
     n_buckets = int(params["n_buckets"])
-    manifests = read_manifests(out_dir)
-    if not manifests:
+    done = store.completed()
+    if not done:
         raise FileNotFoundError(f"no committed buckets under {out_dir}")
-    sample = store.path(manifests[0]["file"])
-    schema = spark.read.parquet(sample).schema
-    types = {f.name: f.dataType.simpleString() for f in schema.fields}
-    one = spark.range(1).select(
-        F.lit(conv_id).cast(types["conv_id"]).alias("conv_id"),
-        F.lit(turn_idx).cast(types["turn_idx"]).alias("turn_idx"))
-    pid = int(with_bucket(one, n_buckets).collect()[0]["pid"])
-    fname = f"bucket-{pid:05d}.parquet"
-    if not any(m["file"] == fname for m in manifests):
+    schema = from_arrow_schema(
+        store.parquet_schema(_bucket_file(min(done))),
+        prefer_timestamp_ntz=True)
+    key_types = (schema["conv_id"].dataType, schema["turn_idx"].dataType)
+    keys = (_key_value("conv_id", conv_id, key_types[0]),
+            _key_value("turn_idx", turn_idx, key_types[1]))
+    pid = None if None in keys else bucket_of(*keys, n_buckets, key_types)
+    if pid not in done:
         return spark.createDataFrame([], schema)
-    return (spark.read.parquet(store.path(fname))
-            .filter((F.col("conv_id") == F.lit(conv_id).cast(types["conv_id"]))
-                    & (F.col("turn_idx")
-                       == F.lit(turn_idx).cast(types["turn_idx"]))))
+    # keys compare as strings: an integer literal is inlined into the
+    # generated code, so every distinct turn_idx would compile the stage
+    # anew (two Janino compiles, ~70 ms a lookup), while a string literal
+    # is passed by reference. A string conv_id keeps its pushed-down
+    # equality (Spark drops the no-op cast).
+    conv_eq, turn_eq = (F.col(c).cast("string") == str(v)
+                        for c, v in zip(("conv_id", "turn_idx"), keys))
+    return (spark.read.schema(schema)
+            .parquet(f"{out_dir.rstrip('/')}/{_bucket_file(pid)}")
+            .filter(conv_eq & turn_eq))

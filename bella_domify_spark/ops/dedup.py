@@ -822,8 +822,9 @@ def ppjoin_pairs(df: DataFrame, id_col: str = "doc_id",
     sets with Jaccard ≥ t MUST share a shingle inside each other's first
     p = s − ⌈t·s⌉ + 1 shingles, so candidate generation joins only those
     prefixes. A length filter (t·|a| ≤ |b| ≤ |a|/t) prunes before
-    verification; verification re-joins the FULL shingle lists for the
-    exact intersection, so the result is identical to brute force — the
+    verification; verification fetches each side's distinct-shingle array
+    (two doc-keyed joins) and takes the exact intersection with
+    array_intersect, so the result is identical to brute force — the
     filter only removes pairs it can prove are below t.
 
     The threshold is an exact rational t_num/t_den, so every comparison
